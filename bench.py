@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from webscale_multimodal_datapipeline_spark.plans.registry import QUERIES
-from webscale_multimodal_datapipeline_spark.session import get_spark
+from webscale_multimodal_datapipeline_spark.session import DEFAULT_CPUS, get_spark
 
 # ---------------------------------------------------------------------------
 # Contention sentinel (round-5 fix, VERDICT r4 #2): the r4 driver run was
@@ -610,7 +610,7 @@ def throughput_workloads(
     # input split; a real 100 TB table arrives as thousands of splits. Spread
     # the replicated input across the cores so per-op throughput measures the
     # operator, not a self-inflicted single-task bottleneck.
-    ncpu = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ncpu = DEFAULT_CPUS
     big = big.repartition(ncpu * 2).persist()
     n = big.count()  # materialize once; ops then measure pure operator cost
     # spin up executor Python workers before any UDF-backed measurement —
@@ -717,7 +717,7 @@ def image_workloads(
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ncpu = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ncpu = DEFAULT_CPUS
     imgs = (
         docs.crossJoin(spark.range(20).withColumnRenamed("id", "rep"))
         .withColumn("doc_id", F.col("doc_id") * 1000 + F.col("rep"))

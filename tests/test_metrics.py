@@ -166,3 +166,68 @@ def test_task_latency_distributions_populate_columns(spark, sf_dir):
 
     null_row = M.operator_metrics_df(res.metrics, latencies=None).first()
     assert null_row.p50_latency is None
+
+
+def _leaf_names(df) -> set[str]:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return {leaves.apply(i).nodeName() for i in range(leaves.size())}
+
+
+def test_metrics_tables_are_local_relations(spark):
+    """The driver-built metrics rows are a one-partition Arrow
+    LocalRelation, and so are the three tables derived from them: writing
+    metrics launches no Python-worker scan and no shuffle. Column names
+    and types are unchanged."""
+    from webscale_multimodal_datapipeline_spark.compiler import MetricsCollector
+
+    mc = MetricsCollector(spark, "local-run")
+    df = mc.instrument(spark.range(10), "source", "source")
+    mc.instrument(df.filter("id < 4"), "curate", "keep_small").count()
+    base = mc.to_dataframe()
+    assert _leaf_names(base) == {"LocalRelation"}
+    assert base.dtypes == [
+        ("run_id", "string"), ("stage_name", "string"), ("operator_name", "string"),
+        ("input_records", "bigint"), ("output_records", "bigint"),
+        ("pass_rate", "double"), ("total_time", "double"), ("throughput", "double"),
+    ]
+    rows = {r.operator_name: r for r in base.collect()}
+    assert (rows["keep_small"].input_records, rows["keep_small"].output_records) == (10, 4)
+    assert rows["keep_small"].pass_rate == 0.4
+    ops = M.operator_metrics_df(mc, latencies={"p50": 0.5})
+    assert ops.dtypes == [
+        ("run_id", "string"), ("stage_name", "string"), ("operator_name", "string"),
+        ("worker_id", "int"), ("timestamp", "timestamp"),
+        ("input_records", "bigint"), ("output_records", "bigint"),
+        ("pass_rate", "double"), ("total_time", "double"),
+        ("avg_latency", "double"), ("min_latency", "double"), ("max_latency", "double"),
+        ("p50_latency", "double"), ("p95_latency", "double"), ("p99_latency", "double"),
+        ("throughput", "double"), ("error_count", "bigint"), ("custom_metrics", "string"),
+    ]
+    stages = M.stage_metrics_df(ops)
+    for t in (ops, stages, M.run_metrics_df(ops, stages)):
+        assert _leaf_names(t) == {"LocalRelation"}
+        # one partition: the rollups group it without a shuffle
+        assert "Exchange" not in t._jdf.queryExecution().executedPlan().toString()
+
+
+def test_task_latency_distributions_scoped_to_run(spark):
+    """Each run's latency columns come from the stages it created: a slow
+    task in an earlier run of the same session does not leak into a later
+    run's distribution."""
+    from webscale_multimodal_datapipeline_spark.compiler import MetricsCollector
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    first = MetricsCollector(spark, "slow-run")
+    spark.range(1, numPartitions=1).selectExpr(
+        "reflect('java.lang.Thread', 'sleep', cast(1500 as bigint)) AS s"
+    ).collect()
+    second = MetricsCollector(spark, "fast-run")
+    spark.range(100, numPartitions=2).count()
+    bus.waitUntilEmpty()
+    slow = M.task_latency_distributions(spark, first.first_stage)
+    fast = M.task_latency_distributions(spark, second.first_stage)
+    assert slow["max"] >= 1.5
+    assert fast is not None and fast["max"] < 1.5
+    assert second.first_stage > first.first_stage
+    everything = M.task_latency_distributions(spark)
+    assert everything["max"] >= slow["max"]

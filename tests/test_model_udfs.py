@@ -90,6 +90,9 @@ def test_visual_degradations_scores_and_nulls(spark, img_df):
     bad = spark.createDataFrame([(1, None)], "id long, image_bytes binary")
     rb = MU.visual_degradations_refiner().apply(bad).first()
     assert all(rb[f"img_vd_{h}"] is None for h in MU.VD_HEADS)
+    # the five heads are fields of ONE model call per row
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("_vd(") == 1, plan
 
 
 def test_torch_gate_raises_without_torch():

@@ -431,3 +431,46 @@ def test_jpeg_scrub_real_fixtures(spark):
     row = create("jpeg_scrub_refiner").apply(df).collect()[0]
     assert row.image_scrub_removed == len(jpg) - len(MM.jpeg_scrub_py(jpg))
     assert bytes(row.image_scrubbed_bytes) == MM.jpeg_scrub_py(jpg)
+
+
+def _leaf_names(df) -> set[str]:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return {leaves.apply(i).nodeName() for i in range(leaves.size())}
+
+
+def test_inline_phash_blocklist_is_a_local_relation(spark, tmp_path):
+    """The inline ``hashes`` list is built on the driver as an Arrow
+    LocalRelation of its distinct non-NULL keys: reading it needs no
+    Python worker, and no aggregate is left to plan over it."""
+    op = MM.PhashBlocklistFilter(hashes=("0123456789abcdef", None, "0123456789abcdef"))
+    block = op._blocklist(spark.range(1))
+    assert _leaf_names(block) == {"LocalRelation"}
+    assert block.schema.simpleString() == "struct<_bad:string>"
+    assert [tuple(r) for r in block.collect()] == [("0123456789abcdef",)]
+    # the parquet-list branch yields the same keys
+    path = str(tmp_path / "blocklist")
+    spark.createDataFrame([(h,) for h in op.hashes], "phash string").write.parquet(path)
+    from_file = MM.PhashBlocklistFilter(blocklist_path=path)._blocklist(spark.range(1))
+    assert [tuple(r) for r in from_file.collect()] == [("0123456789abcdef",)]
+
+
+@pytest.mark.parametrize(
+    "make, udf_name",
+    [
+        (lambda: MM.image_metadata_refiner(), "_meta"),
+        (lambda: MM.technical_quality_refiner(), "_quality"),
+        (lambda: MM.dominant_color_refiner(), "_color"),
+        (lambda: MM.audio_features_refiner(bytes_col="image_bytes"), "audio_features_udf"),
+    ],
+)
+def test_struct_refiner_runs_its_udf_once(spark, bin_df, make, udf_name):
+    """A struct-returning kernel UDF is projected once and its fields are
+    extracted from that column: one UDF call per row in the executed plan,
+    also with a filter over an output column above it."""
+    ref = make()
+    out = ref.apply(bin_df)
+    out = out.filter(F.col(next(iter(ref.columns))).isNotNull())
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count(f"{udf_name}(") == 1, plan
+    assert out.columns == bin_df.columns + list(ref.columns)
+    assert out.count() > 0

@@ -45,7 +45,7 @@ from webscale_multimodal_datapipeline_spark.operators.dedup import (  # noqa: E4
     minhash_lsh_dedup,
     text_exact_dedup,
 )
-from webscale_multimodal_datapipeline_spark.session import get_spark  # noqa: E402
+from webscale_multimodal_datapipeline_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 # Optional lane subset (round 9 session 2): SPARK_GRAFT_PROBE_LANES=a,b
@@ -64,7 +64,7 @@ def lane_on(*names: str) -> bool:
 
 def replicated(spark, sf_dir: str, factor: int):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ncpu = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ncpu = DEFAULT_CPUS
     big = (
         docs.crossJoin(spark.range(factor).withColumnRenamed("id", "rep"))
         .withColumn("doc_id", F.col("doc_id") * 10_000 + F.col("rep"))
@@ -254,7 +254,7 @@ def main() -> None:
                 ),
             )
         big = big.repartition(
-            int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+            DEFAULT_CPUS
         ).localCheckpoint(eager=True)
         return big, big.count()
 
@@ -440,7 +440,7 @@ def main() -> None:
                 (F.col("c") + F.col("rep") * off).alias("c"),
                 (F.col("s") + F.col("rep") * off).alias("s"),
             )
-            .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+            .repartition(DEFAULT_CPUS)
             .localCheckpoint(eager=True)
         )
         n = pairs.count()

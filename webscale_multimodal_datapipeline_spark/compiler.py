@@ -58,6 +58,7 @@ from webscale_multimodal_datapipeline_spark.operators.base import (
     RefinerOperator,
 )
 from webscale_multimodal_datapipeline_spark.operators.registry import create as create_operator
+from webscale_multimodal_datapipeline_spark.session import local_frame
 
 
 @dataclass
@@ -224,6 +225,16 @@ def _build_expectations(specs: list[dict[str, Any]]):
     return all_exps, enforced
 
 
+def next_stage_id(spark: SparkSession) -> int | None:
+    """Id the scheduler gives the next stage it creates (ids only grow
+    within a SparkContext); None when the JVM scheduler is unreachable
+    (e.g. Spark Connect)."""
+    try:
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextStageId())
+    except Exception:
+        return None
+
+
 class MetricsCollector:
     """Per-operator in/out counts via ``df.observe`` (reference A1/A2:
     ``framework/operator.py:119-184``, ``executor.py:760-846``) — counters
@@ -235,6 +246,9 @@ class MetricsCollector:
         self.spark = spark
         self.run_id = run_id
         self.started = time.time()
+        # first stage id this run can own: the task-latency columns read
+        # only stages from here on (metrics.task_latency_distributions)
+        self.first_stage = next_stage_id(spark)
         # (stage, operator, Observation, instrumented checkpoint df)
         self._obs: list[tuple[str, str, Any, DataFrame]] = []
         self._Observation = Observation
@@ -327,12 +341,16 @@ class MetricsCollector:
             )
             for m in rows
         ]
-        return self.spark.createDataFrame(
+        # one partition: each metrics table is written as one file, and the
+        # stage/run rollups group it without a shuffle (a single partition
+        # already satisfies their clustering)
+        return local_frame(
+            self.spark,
             data,
             "run_id string, stage_name string, operator_name string, "
             "input_records long, output_records long, pass_rate double, "
             "total_time double, throughput double",
-        )
+        ).coalesce(1)
 
 
 class Pipeline:

@@ -11,8 +11,9 @@ Divergence note (documented, SURVEY §2.6): per-record latency percentiles
 meaning in a whole-stage-codegen'd plan — operators aren't timed
 per-record. The latency columns are instead filled with TASK-duration
 distributions from Spark's app status store (the same data the UI's
-task-summary quantiles show): min/max and avg are exact over completed
-tasks, p50/p95/p99 are task-count-weighted means of per-stage quantiles.
+task-summary quantiles show), over the stages the run itself created:
+min/max and avg are exact over completed tasks, p50/p95/p99 are
+task-count-weighted means of per-stage quantiles.
 If the status store is unreachable the columns fall back to NULL; the
 schema is unchanged either way.
 """
@@ -21,17 +22,24 @@ from __future__ import annotations
 
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from webscale_multimodal_datapipeline_spark.compiler import MetricsCollector
+from webscale_multimodal_datapipeline_spark.compiler import MetricsCollector, next_stage_id
 
 
-def task_latency_distributions(spark: SparkSession) -> dict[str, float] | None:
-    """Task-duration distribution (seconds) across this app's completed
-    stages, read from ``AppStatusStore`` — the listener-fed store behind
-    the UI/REST ``taskSummary`` quantiles. Pure driver-side metadata reads;
-    no job is triggered. None when no stage has completed task metrics."""
+def task_latency_distributions(
+    spark: SparkSession, since_stage: int | None = None
+) -> dict[str, float] | None:
+    """Task-duration distribution (seconds) across completed stages, read
+    from ``AppStatusStore`` — the listener-fed store behind the UI/REST
+    ``taskSummary`` quantiles. Pure driver-side metadata reads; no job is
+    triggered. ``since_stage`` (a ``MetricsCollector.first_stage``) keeps
+    only the stages created from that id on, so a run's columns hold its
+    own tasks and the read costs O(run stages), not O(session stages);
+    None reads every stage of the session. None when no stage has
+    completed task metrics."""
     try:
         sc = spark.sparkContext
         jvm = sc._jvm
@@ -40,17 +48,21 @@ def task_latency_distributions(spark: SparkSession) -> dict[str, float] | None:
         quants = sc._gateway.new_array(jvm.double, 5)
         for i, q in enumerate((0.0, 0.5, 0.95, 0.99, 1.0)):
             quants[i] = q
-        stages = store.stageList(empty, False, False, quants, empty)
         per_stage: list[tuple[int, list[float], float]] = []
-        for i in range(stages.size()):
-            s = stages.apply(i)
-            opt = store.taskSummary(s.stageId(), s.attemptId(), quants)
-            n = int(s.numCompleteTasks())
-            if not opt.isDefined() or n <= 0:
+        for sid in range(since_stage or 0, next_stage_id(spark)):
+            try:
+                attempts = store.stageData(sid, False, empty, False, quants)
+            except Py4JJavaError:  # not (yet) in the store: never posted, or evicted
                 continue
-            d = opt.get().duration()
-            qs = [float(d.apply(j)) for j in range(d.size())]
-            per_stage.append((n, qs, float(s.executorRunTime())))
+            for a in range(attempts.size()):
+                s = attempts.apply(a)
+                opt = store.taskSummary(sid, s.attemptId(), quants)
+                n = int(s.numCompleteTasks())
+                if not opt.isDefined() or n <= 0:
+                    continue
+                d = opt.get().duration()
+                qs = [float(d.apply(j)) for j in range(d.size())]
+                per_stage.append((n, qs, float(s.executorRunTime())))
         if not per_stage:
             return None
         total_tasks = sum(n for n, _, _ in per_stage)
@@ -73,11 +85,11 @@ def operator_metrics_df(
 ) -> DataFrame:
     """operators_*.parquet shape (metrics/writer.py:28-54).
 
-    ``latencies``: True (default) reads the task-duration distribution from
-    the status store; a dict injects one; None/False leaves the columns
-    NULL (the pre-listener behavior)."""
+    ``latencies``: True (default) reads the task-duration distribution of
+    the run's own stages from the status store; a dict injects one;
+    None/False leaves the columns NULL (the pre-listener behavior)."""
     if latencies is True:
-        latencies = task_latency_distributions(collector.spark)
+        latencies = task_latency_distributions(collector.spark, collector.first_stage)
     lat = latencies or {}
 
     def _lat(key: str):

@@ -16,7 +16,7 @@ the anti-join the reference materializes imperatively).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -82,12 +82,34 @@ class RefinerOperator(Operator):
 
     kind = "refiner"
 
-    def __init__(self, name: str, columns: dict[str, Column]):
+    def __init__(
+        self,
+        name: str,
+        columns: dict[str, Column],
+        hidden: dict[str, Column] | None = None,
+    ):
         super().__init__(name)
         self.columns = columns
+        # projected before ``columns`` (which may read them), dropped after
+        self.hidden = hidden or {}
 
     def apply(self, df: DataFrame) -> DataFrame:
-        return df.withColumns(self.columns)
+        if not self.hidden:
+            return df.withColumns(self.columns)
+        return df.withColumns(self.hidden).withColumns(self.columns).drop(*self.hidden)
+
+
+def struct_refiner(name: str, struct: Column, fields: Iterable[str]) -> RefinerOperator:
+    """Refiner adding ``fields`` of ONE struct-valued expression — a kernel
+    UDF returning several columns. Kernel UDFs are non-deterministic (the
+    barrier against re-evaluation, see ``operators/multimodal.py``), so
+    Catalyst cannot merge ``udf(col)[f]`` reads: one read per field runs
+    the UDF once per field. The struct goes into a hidden column first,
+    so the UDF runs once per row and the fields are plain extractions."""
+    hidden = f"__{name}_struct"
+    return RefinerOperator(
+        name, {f: F.col(hidden)[f] for f in fields}, hidden={hidden: struct}
+    )
 
 
 class FilterOperator(Operator):

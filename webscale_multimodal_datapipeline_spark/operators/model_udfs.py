@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from webscale_multimodal_datapipeline_spark.operators.base import RefinerOperator
+from webscale_multimodal_datapipeline_spark.operators.base import RefinerOperator, struct_refiner
 from webscale_multimodal_datapipeline_spark.operators.multimodal import HAVE_PIL
 
 HAVE_TORCH = False
@@ -302,7 +302,4 @@ def visual_degradations_refiner(
     """R3 ImageVisualDegradationsRefiner: five degradation scores from one
     shared trunk; NULL scores for unreadable payloads."""
     udf = visual_degradations_udf(model_name, batch_size, backend)
-    struct = udf(F.col(bytes_col))
-    return RefinerOperator(
-        name, {f"img_vd_{h}": struct[f"img_vd_{h}"] for h in VD_HEADS}
-    )
+    return struct_refiner(name, udf(F.col(bytes_col)), [f"img_vd_{h}" for h in VD_HEADS])

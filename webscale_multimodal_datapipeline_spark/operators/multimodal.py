@@ -40,7 +40,9 @@ from webscale_multimodal_datapipeline_spark.operators.base import (
     OperatorResult,
     RefinerOperator,
     rejection_details,
+    struct_refiner,
 )
+from webscale_multimodal_datapipeline_spark.session import local_frame
 
 HAVE_PIL = False
 try:  # pragma: no cover - not in this container
@@ -275,15 +277,8 @@ def image_metadata_refiner(
     backend: str = "fake",
     name: str = "image_metadata_refiner",
 ) -> RefinerOperator:
-    meta = image_metadata_udf_for(backend)(F.col(bytes_col))
-    return RefinerOperator(
-        name,
-        {
-            "image_width": meta["image_width"],
-            "image_height": meta["image_height"],
-            "image_file_size_bytes": meta["image_file_size_bytes"],
-            "image_format": meta["image_format"],
-        },
+    return struct_refiner(
+        name, image_metadata_udf_for(backend)(F.col(bytes_col)), _META_SCHEMA.names
     )
 
 
@@ -445,13 +440,8 @@ def technical_quality_refiner(
     backend: str = "fake",
     name: str = "image_technical_quality_refiner",
 ) -> RefinerOperator:
-    q = technical_quality_udf_for(backend)(F.col(bytes_col))
-    return RefinerOperator(
-        name,
-        {
-            "image_compression_artifacts": q["image_compression_artifacts"],
-            "image_information_entropy": q["image_information_entropy"],
-        },
+    return struct_refiner(
+        name, technical_quality_udf_for(backend)(F.col(bytes_col)), _QUALITY_SCHEMA.names
     )
 
 
@@ -700,14 +690,8 @@ def audio_features_udf(data: pd.Series) -> pd.DataFrame:
 def audio_features_refiner(
     bytes_col: str = "audio_bytes", name: str = "audio_features_refiner"
 ) -> RefinerOperator:
-    feats = audio_features_udf(F.col(bytes_col))
-    return RefinerOperator(
-        name,
-        {
-            "audio_duration_s": feats["audio_duration_s"],
-            "audio_rms": feats["audio_rms"],
-            "audio_zcr": feats["audio_zcr"],
-        },
+    return struct_refiner(
+        name, audio_features_udf(F.col(bytes_col)), ("audio_duration_s", "audio_rms", "audio_zcr")
     )
 
 # Mark every kernel UDF non-deterministic (they ARE pure, but the flag is
@@ -776,18 +760,7 @@ def dominant_color_refiner(
     bytes_col: str = "image_bytes", name: str = "dominant_color_refiner"
 ):
     """Adds color_r/g/b of the modal quantized color bucket."""
-    from webscale_multimodal_datapipeline_spark.operators.base import RefinerOperator
-
-    udf = dominant_color_udf()
-    struct = udf(F.col(bytes_col))
-    return RefinerOperator(
-        name,
-        {
-            "color_r": struct["color_r"],
-            "color_g": struct["color_g"],
-            "color_b": struct["color_b"],
-        },
-    )
+    return struct_refiner(name, dominant_color_udf()(F.col(bytes_col)), _COLOR_SCHEMA.names)
 
 
 def frame_sample_lateral_udtf(
@@ -860,20 +833,25 @@ class PhashBlocklistFilter(Operator):
         self.backend = backend
 
     def _blocklist(self, df: DataFrame) -> DataFrame:
+        """Distinct non-NULL keys as column ``_bad``."""
         spark = df.sparkSession
         if self.blocklist_path:
-            return spark.read.parquet(self.blocklist_path).select(
-                F.col("phash").alias("_bad")
+            return (
+                spark.read.parquet(self.blocklist_path)
+                .select(F.col("phash").alias("_bad"))
+                .where(F.col("_bad").isNotNull())
+                .distinct()
             )
-        return spark.createDataFrame(
-            [(h,) for h in self.hashes], "X string"
-        ).select(F.col("X").alias("_bad"))
+        # inline keys are cleaned on the driver, so the Arrow LocalRelation
+        # needs no aggregate (and its broadcast no shuffle) in the plan
+        keys = sorted({h for h in self.hashes if h is not None})
+        return local_frame(spark, [(h,) for h in keys], "_bad string")
 
     def apply(self, df: DataFrame) -> DataFrame:
         keyed = df.withColumn(
             "_phash", phash_udf_for(self.backend)(F.col(self.bytes_col))
         )
-        block = F.broadcast(self._blocklist(df).where(F.col("_bad").isNotNull()).distinct())
+        block = F.broadcast(self._blocklist(df))
         return (
             keyed.join(block, keyed["_phash"] == block["_bad"], "left_anti")
             .drop("_phash")
@@ -886,7 +864,7 @@ class PhashBlocklistFilter(Operator):
         keyed = df.withColumn(
             "_phash", phash_udf_for(self.backend)(F.col(self.bytes_col))
         ).cache()
-        block = F.broadcast(self._blocklist(df).where(F.col("_bad").isNotNull()).distinct())
+        block = F.broadcast(self._blocklist(df))
         passed = keyed.join(
             block, keyed["_phash"] == block["_bad"], "left_anti"
         ).drop("_phash")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from webscale_multimodal_datapipeline_spark.functions import vectors as VX
 from webscale_multimodal_datapipeline_spark.operators.dedup import hyperplane_bucket
+from webscale_multimodal_datapipeline_spark.session import local_frame
 
 
 def cosine_topk(
@@ -119,7 +120,8 @@ def ivf_topk(
     spark = corpus.sparkSession
     assigned, centroids = ivf_assign(corpus, n_clusters, seed, emb_col)
     cent_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(cid, c) for cid, c in enumerate(centroids)],
             f"_cluster int, _centroid array<double>",
         )
@@ -368,7 +370,7 @@ def pq_adc_topk(
                 lut.append((qr[query_id_col], j, c, pd_))
     spark = codes_df.sparkSession
     lut_df = F.broadcast(
-        spark.createDataFrame(lut, f"{query_id_col} long, _j int, _code int, _pd double")
+        local_frame(spark, lut, f"{query_id_col} long, _j int, _code int, _pd double")
     )
 
     unpivoted = codes_df.select(
@@ -513,14 +515,15 @@ def ivf_topk_stored(
         for c in order:
             probe_rows.append((r[query_id_col], int(c), [float(v) for v in emb]))
     if not probe_rows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     clusters = sorted({c for _, c, _ in probe_rows})
     corpus = None
     for c in clusters:
         part = TX.read(spark, table, between=("_cluster", c, c))
         corpus = part if corpus is None else corpus.unionByName(part)
     probes = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             probe_rows,
             ST.StructType(
                 [

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from webscale_multimodal_datapipeline_spark.catalog import load_table
 from webscale_multimodal_datapipeline_spark.operators import multimodal as MM
+from webscale_multimodal_datapipeline_spark.session import local_frame
 
 # Mirror of fake_image_bytes in SQL: md5 hex chain -> 64 bytes.
 _FAKE_HEX = (
@@ -457,7 +458,8 @@ def m_aspect_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = MM.image_metadata_refiner().apply(_with_bytes(spark, sf_dir)).select(
         "doc_id", "image_width", "image_height"
     ).filter((F.col("image_width") > 0) & (F.col("image_height") > 0))
-    b = spark.createDataFrame(
+    b = local_frame(
+        spark,
         list(_ASPECT_BUCKETS), "bucket_id int, bucket string, bw int, bh int"
     )
     scored = df.join(F.broadcast(b)).select(

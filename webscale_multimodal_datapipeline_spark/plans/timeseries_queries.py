@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from webscale_multimodal_datapipeline_spark.catalog import load_table
+from webscale_multimodal_datapipeline_spark.session import local_frame
 
 DEC = "decimal(18,6)"
 
@@ -61,7 +62,8 @@ def ts_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     would be a broadcast-nested-loop — quadratic at scale; the bucket
     trick makes it a hash join)."""
     l = load_table(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [(i, i * 10 + 1, (i + 1) * 10, f"{i * 10 + 1}-{(i + 1) * 10}") for i in range(5)],
         "band_id int, lo int, hi int, band string",
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from webscale_multimodal_datapipeline_spark.catalog import load_table
 from webscale_multimodal_datapipeline_spark.functions import text as TX
 from webscale_multimodal_datapipeline_spark.plans import oracle_fragments as OQ
+from webscale_multimodal_datapipeline_spark.session import local_frame
 
 BLOCKED_DOMAINS = ("src1.example.com", "badsite.org")
 # || not concat(): DuckDB's concat() ignores NULL args where Spark's
@@ -100,7 +101,8 @@ def u_blocklist_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (the scale path for RefinedWeb's 4.6M-domain list — ``isin``
     stops scaling, a broadcast hash anti-join doesn't)."""
     df = _with_url(spark, sf_dir).withColumn("domain", domain_of("url"))
-    blocklist = spark.createDataFrame(
+    blocklist = local_frame(
+        spark,
         [("www.src1.example.com",), ("www.src7.example.com",)], "domain string"
     )
     return df.join(F.broadcast(blocklist), "domain", "left_anti").select(

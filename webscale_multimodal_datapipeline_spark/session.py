@@ -12,15 +12,26 @@ one you'd also want on a real cluster at 100 TB:
   reference's Rust batch kernels (batch in / batch out, GIL-free).
 - UTC session timezone — deterministic timestamp semantics for the DuckDB
   oracle comparison.
+- Python workers get the package root on ``PYTHONPATH`` so pandas UDFs
+  import the package whatever the driver's working directory is.
+
+Small tables built on the driver go through :func:`local_frame`: an Arrow
+``LocalRelation`` in the plan, never a parallelized Python RDD that every
+action re-reads through Python workers.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+# directory holding the package; Spark appends the driver's own
+# PYTHONPATH to the workers' after this entry
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -50,9 +61,34 @@ def get_spark(
         # 100 TB this prunes fact-table shuffle input by the dim-side
         # selectivity; at local scale it's a no-op beyond plan overhead.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """DataFrame over a few driver-side rows (tuples in ``schema`` order),
+    built as an Arrow table so Spark plans it as a ``LocalRelation``.
+
+    ``spark.createDataFrame(list)`` instead parallelizes a Python RDD, and
+    every action that reads it pickles the rows through Python workers
+    again — a job per read for a table of a handful of rows. ``schema`` is
+    a ``StructType`` or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

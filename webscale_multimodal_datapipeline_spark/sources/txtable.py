@@ -41,6 +41,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from webscale_multimodal_datapipeline_spark.session import local_frame
+
 _LOG_DIR = "_txlog"
 
 
@@ -554,7 +556,7 @@ def read_points(
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(log[-1].schema_json))
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.parquet(*[os.path.join(table, f) for f in files])
 
 
@@ -584,7 +586,7 @@ def read(
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(log[-1].schema_json))
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     df = spark.read.parquet(*[os.path.join(table, f) for f in files])
     if between is not None:
         col, lo, hi = between

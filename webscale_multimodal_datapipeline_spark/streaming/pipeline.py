@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from webscale_multimodal_datapipeline_spark.session import local_frame
+
 # Matches the fixture's current physical layout: ts is parquet
 # TIMESTAMP(MICROS) isAdjustedToUTC=false → TIMESTAMP_NTZ. (Earlier fixture
 # generations wrote TIMESTAMP(NANOS), declared LongType + nanosAsLong; use
@@ -1537,7 +1539,8 @@ def _span_sketch_rebuild(spark, gram_table, sketch_table, epoch_id, epoch):
     bits = np.zeros(m // 8, dtype=np.uint8)
     if len(pos):
         bits[pos // 8] |= np.uint8(1) << (pos % 8).astype(np.uint8)
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [
             (
                 int(epoch_id),
@@ -1646,7 +1649,8 @@ def incremental_spandedup_sketch_batch_handler(
                 m, bk, merged, _ = state
                 cand = bg[_bloom_maybe(bg, merged, m, bk)]
                 if len(cand):
-                    cand_df = spark.createDataFrame(
+                    cand_df = local_frame(
+                        spark,
                         [(int(x),) for x in cand], "_h bigint"
                     )
                     verified = (
@@ -1687,7 +1691,8 @@ def incremental_spandedup_sketch_batch_handler(
             # m-sized bitmap — O(batch) bytes however large the filter
             # has grown; the prober places their bits at read time (see
             # _span_sketch_state for the measured failure this replaces)
-            erow = spark.createDataFrame(
+            erow = local_frame(
+                spark,
                 [
                     (
                         int(epoch_id),
