@@ -231,3 +231,159 @@ def test_task_latency_distributions_scoped_to_run(spark):
     assert second.first_stage > first.first_stage
     everything = M.task_latency_distributions(spark)
     assert everything["max"] >= slow["max"]
+
+
+OPERATOR_DTYPES = [
+    ("run_id", "string"), ("stage_name", "string"), ("operator_name", "string"),
+    ("worker_id", "int"), ("timestamp", "timestamp"),
+    ("input_records", "bigint"), ("output_records", "bigint"),
+    ("pass_rate", "double"), ("total_time", "double"),
+    ("avg_latency", "double"), ("min_latency", "double"), ("max_latency", "double"),
+    ("p50_latency", "double"), ("p95_latency", "double"), ("p99_latency", "double"),
+    ("throughput", "double"), ("error_count", "bigint"), ("custom_metrics", "string"),
+]
+STAGE_DTYPES = [
+    ("run_id", "string"), ("stage_name", "string"), ("num_operators", "bigint"),
+    ("total_time", "double"), ("min_throughput", "double"), ("max_throughput", "double"),
+    ("avg_throughput", "double"), ("error_count", "bigint"),
+    ("input_records", "bigint"), ("output_records", "bigint"), ("pass_rate", "double"),
+]
+RUN_DTYPES = [
+    ("run_id", "string"), ("num_stages", "bigint"),
+    ("total_input_records", "bigint"), ("total_output_records", "bigint"),
+    ("duration", "double"), ("avg_throughput", "double"), ("total_errors", "bigint"),
+    ("overall_pass_rate", "double"), ("config", "string"),
+]
+
+
+def _small_run(spark, run_id="small-run"):
+    from webscale_multimodal_datapipeline_spark.compiler import MetricsCollector
+
+    mc = MetricsCollector(spark, run_id)
+    df = mc.instrument(spark.range(10), "source", "source")
+    df = mc.instrument(df.filter("id < 6"), "curate", "keep_small")
+    mc.instrument(df.filter("id % 2 = 0"), "curate", "keep_even").count()
+    return mc
+
+
+def test_write_metrics_launches_no_spark_job(spark, tmp_path):
+    """The three tables are written by pyarrow from driver rows: no job
+    runs between the pipeline's action and the end of the write."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    mc = _small_run(spark)
+    sc.setJobGroup("metrics-write", "write_metrics")
+    try:
+        before = set(tracker.getJobIdsForGroup("metrics-write"))
+        M.write_metrics(mc, str(tmp_path / "m"))
+        assert set(tracker.getJobIdsForGroup("metrics-write")) == before
+        # the probe sees jobs of this group: a Spark action is counted
+        spark.range(3).count()
+        assert set(tracker.getJobIdsForGroup("metrics-write")) > before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ops = spark.read.parquet(str(tmp_path / "m" / "operators"))
+    assert sorted((r.operator_name, r.input_records, r.output_records) for r in ops.collect()) == [
+        ("keep_even", 6, 3), ("keep_small", 10, 6), ("source", 10, 10),
+    ]
+
+
+def test_written_tables_read_back_with_pinned_dtypes(spark, tmp_path):
+    """Spark reads the pyarrow-written parts with the column names, order
+    and types the Spark-written tables had, and only the part files are
+    visible (no leftover ``_``-prefixed temporaries)."""
+    import os
+
+    mc = _small_run(spark)
+    M.write_metrics(mc, f"file://{tmp_path}/m", config_json='{"k": 2}')
+    for name, dtypes in (
+        ("operators", OPERATOR_DTYPES), ("stages", STAGE_DTYPES), ("runs", RUN_DTYPES),
+    ):
+        files = os.listdir(tmp_path / "m" / name)
+        assert len(files) == 1 and files[0].startswith("part-"), files
+        assert files[0].endswith(".snappy.parquet")
+        assert spark.read.parquet(str(tmp_path / "m" / name)).dtypes == dtypes
+    run = spark.read.parquet(str(tmp_path / "m" / "runs")).first()
+    assert (run.num_stages, run.total_input_records, run.total_output_records) == (2, 10, 3)
+    assert run.overall_pass_rate == 0.3 and run.config == '{"k": 2}'
+    ops = spark.read.parquet(str(tmp_path / "m" / "operators")).collect()
+    assert len({r.timestamp for r in ops}) == 1 and ops[0].timestamp is not None
+
+
+def _op(run, stage, name, n_in, n_out, total, tput, errors):
+    return M.OperatorRow(
+        run, stage, name, None, None, n_in, n_out, n_out / n_in if n_in else 1.0, total,
+        None, None, None, None, None, None, tput, errors, "{}",
+    )
+
+
+# 2 runs x 2 stages x 2 operators, the runs' rows interleaved
+ROLLUP_OPS = [
+    _op("r1", "a", "a1", 10, 8, 1.0, 2.0, 0),
+    _op("r2", "a", "a1", 0, 0, 0.5, 0.0, 0),
+    _op("r1", "a", "a2", 8, 6, 3.0, 4.0, 1),
+    _op("r2", "a", "a2", 0, 0, 0.25, 1.0, 0),
+    _op("r1", "b", "b1", 6, 6, 2.0, 1.0, 0),
+    _op("r1", "b", "b2", 6, 3, 5.0, 7.0, 2),
+    _op("r2", "b", "b1", 0, 0, 0.75, 2.0, 3),
+    _op("r2", "b", "b2", 0, 0, 0.5, 4.0, 0),
+]
+ROLLUP_STAGES = [
+    # run, stage, ops, max time, min/max/avg throughput, errors, first in, last out, rate
+    ("r1", "a", 2, 3.0, 2.0, 4.0, 3.0, 1, 10, 6, 0.6),
+    ("r2", "a", 2, 0.5, 0.0, 1.0, 0.5, 0, 0, 0, 1.0),
+    ("r1", "b", 2, 5.0, 1.0, 7.0, 4.0, 2, 6, 3, 0.5),
+    ("r2", "b", 2, 0.75, 2.0, 4.0, 3.0, 3, 0, 0, 1.0),
+]
+ROLLUP_RUNS = [
+    # run, stages, first stage in, last stage out, max time, mean stage avg, errors, rate
+    ("r1", 2, 10, 3, 5.0, 3.5, 3, 0.3, "{}"),
+    ("r2", 2, 0, 0, 0.75, 1.75, 3, 1.0, "{}"),
+]
+
+
+def test_python_rollups_match_hand_computed_values(spark):
+    """Stage input = first operator's input, output = last operator's
+    output (row order), time = max, throughput min/max/avg, errors summed;
+    the run rolls stages up the same way, with the zero-input pass-rate
+    guard. The DataFrame views give the same rows."""
+    from webscale_multimodal_datapipeline_spark.session import local_frame
+
+    stages = M.stage_rows(ROLLUP_OPS)
+    assert [tuple(s) for s in stages] == ROLLUP_STAGES
+    assert [tuple(r) for r in M.run_rows(stages)] == ROLLUP_RUNS
+
+    ops_df = local_frame(spark, ROLLUP_OPS, M.OPERATOR_SCHEMA)
+    stages_df = M.stage_metrics_df(ops_df)
+    assert [tuple(r) for r in stages_df.collect()] == ROLLUP_STAGES
+    assert [tuple(r) for r in M.run_metrics_df(ops_df, stages_df).collect()] == ROLLUP_RUNS
+
+
+def test_append_onto_spark_written_part_reads_as_one_table(spark, tmp_path):
+    """A metrics directory written by Spark (INT96 timestamps) takes a
+    pyarrow-written part (INT64 microsecond timestamps) and reads back as
+    one table of both runs."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    old = _small_run(spark, "spark-run")
+    ops_dir = str(tmp_path / "m" / "operators")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        M.operator_metrics_df(old).coalesce(1).write.mode("append").parquet(ops_dir)
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    (spark_part,) = [f for f in os.listdir(ops_dir) if f.startswith("part-")]
+    ts = pq.ParquetFile(os.path.join(ops_dir, spark_part)).schema.column(4)
+    assert (ts.name, ts.physical_type) == ("timestamp", "INT96")
+
+    M.write_metrics(_small_run(spark, "arrow-run"), str(tmp_path / "m"))
+    ops = spark.read.parquet(ops_dir)
+    assert ops.dtypes == OPERATOR_DTYPES
+    rows = ops.collect()
+    assert sorted({r.run_id for r in rows}) == ["arrow-run", "spark-run"] and len(rows) == 6
+    stamps = {r.run_id: r.timestamp for r in rows}
+    assert None not in stamps.values()
+    assert abs((stamps["arrow-run"] - stamps["spark-run"]).total_seconds()) < 600

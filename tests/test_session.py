@@ -98,3 +98,14 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     assert "rows 4" in proc.stdout
     cpus = re.search(r"cpus (\d+) (\d+)", proc.stdout)
     assert cpus and cpus.group(1) == cpus.group(2)
+
+
+def test_driver_memory_is_half_of_ram_capped_at_16g():
+    from webscale_multimodal_datapipeline_spark.session import driver_memory
+
+    gib = 1 << 30
+    assert driver_memory(15 * gib) == "7680m"
+    assert driver_memory(2 * gib) == "1024m"
+    assert driver_memory(32 * gib) == "16384m"
+    assert driver_memory(256 * gib) == "16384m"
+    assert re.fullmatch(r"\d+m", driver_memory())

@@ -323,12 +323,13 @@ class MetricsCollector:
             )
         return rows
 
-    def to_dataframe(self) -> DataFrame:
-        """Metrics as a DataFrame in the reference's operator-metrics
-        parquet shape (``framework/metrics/writer.py:28-54``)."""
+    def timed_rows(self) -> list[tuple]:
+        """One :meth:`harvest` as ``(run_id, stage_name, operator_name,
+        input_records, output_records, pass_rate, total_time, throughput)``
+        tuples; ``total_time`` is the run's wall so far."""
         rows = self.harvest()
         total_time = time.time() - self.started
-        data = [
+        return [
             (
                 m.run_id,
                 m.stage_name,
@@ -341,12 +342,15 @@ class MetricsCollector:
             )
             for m in rows
         ]
-        # one partition: each metrics table is written as one file, and the
-        # stage/run rollups group it without a shuffle (a single partition
-        # already satisfies their clustering)
+
+    def to_dataframe(self) -> DataFrame:
+        """Metrics as a DataFrame in the reference's operator-metrics
+        parquet shape (``framework/metrics/writer.py:28-54``)."""
+        # one partition: a write of it is one file, and a grouping of it
+        # needs no shuffle
         return local_frame(
             self.spark,
-            data,
+            self.timed_rows(),
             "run_id string, stage_name string, operator_name string, "
             "input_records long, output_records long, pass_rate double, "
             "total_time double, throughput double",

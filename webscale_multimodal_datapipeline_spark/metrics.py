@@ -6,6 +6,12 @@ counters, and the report-layer aggregate queries (funnel, bottleneck —
 ``framework/metrics/reporter.py:689-701,762-773,962``) as plain Spark SQL
 over those tables.
 
+The three tables are a handful of rows each, so they are built and rolled
+up as Python rows on the driver and written by pyarrow, as the reference
+does (``pa.Table.from_pylist``): writing a run's metrics launches no Spark
+job. The ``*_metrics_df`` functions are ``LocalRelation`` views over the
+same rows.
+
 Divergence note (documented, SURVEY §2.6): per-record latency percentiles
 (p50/p95/p99 over a 10k reservoir, ``operator.py:160-168``) have no
 meaning in a whole-stage-codegen'd plan — operators aren't timed
@@ -20,13 +26,21 @@ schema is unchanged either way.
 
 from __future__ import annotations
 
-import time
+import operator
+import os
+import uuid
+from collections import namedtuple
+from collections.abc import Iterable
+from datetime import datetime, timezone
+from functools import reduce
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from webscale_multimodal_datapipeline_spark.compiler import MetricsCollector, next_stage_id
+from webscale_multimodal_datapipeline_spark.session import arrow_table, local_frame
 
 
 def task_latency_distributions(
@@ -80,102 +94,165 @@ def task_latency_distributions(
         return None
 
 
-def operator_metrics_df(
+def _schema(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype) for name, dtype in cols])
+
+
+_STR, _INT, _LONG, _DBL = T.StringType(), T.IntegerType(), T.LongType(), T.DoubleType()
+
+# operators_*.parquet (metrics/writer.py:28-54)
+OPERATOR_SCHEMA = _schema(
+    ("run_id", _STR), ("stage_name", _STR), ("operator_name", _STR),
+    ("worker_id", _INT), ("timestamp", T.TimestampType()),
+    ("input_records", _LONG), ("output_records", _LONG),
+    ("pass_rate", _DBL), ("total_time", _DBL),
+    ("avg_latency", _DBL), ("min_latency", _DBL), ("max_latency", _DBL),
+    ("p50_latency", _DBL), ("p95_latency", _DBL), ("p99_latency", _DBL),
+    ("throughput", _DBL), ("error_count", _LONG), ("custom_metrics", _STR),
+)
+# stages_*.parquet (metrics/writer.py:56-71)
+STAGE_SCHEMA = _schema(
+    ("run_id", _STR), ("stage_name", _STR), ("num_operators", _LONG),
+    ("total_time", _DBL), ("min_throughput", _DBL), ("max_throughput", _DBL),
+    ("avg_throughput", _DBL), ("error_count", _LONG),
+    ("input_records", _LONG), ("output_records", _LONG), ("pass_rate", _DBL),
+)
+# runs_*.parquet (metrics/writer.py:73-82)
+RUN_SCHEMA = _schema(
+    ("run_id", _STR), ("num_stages", _LONG),
+    ("total_input_records", _LONG), ("total_output_records", _LONG),
+    ("duration", _DBL), ("avg_throughput", _DBL), ("total_errors", _LONG),
+    ("overall_pass_rate", _DBL), ("config", _STR),
+)
+OperatorRow = namedtuple("OperatorRow", OPERATOR_SCHEMA.fieldNames())
+StageRow = namedtuple("StageRow", STAGE_SCHEMA.fieldNames())
+RunRow = namedtuple("RunRow", RUN_SCHEMA.fieldNames())
+
+
+def operator_rows(
     collector: MetricsCollector, latencies: dict[str, float] | None | bool = True
-) -> DataFrame:
-    """operators_*.parquet shape (metrics/writer.py:28-54).
+) -> list[OperatorRow]:
+    """The operators table as driver-side rows, from one harvest.
 
     ``latencies``: True (default) reads the task-duration distribution of
     the run's own stages from the status store; a dict injects one;
-    None/False leaves the columns NULL (the pre-listener behavior)."""
+    None/False leaves the columns NULL (the pre-listener behavior). The
+    timestamp is one UTC instant per call, as ``current_timestamp()`` is
+    one per query."""
     if latencies is True:
         latencies = task_latency_distributions(collector.spark, collector.first_stage)
     lat = latencies or {}
+    lat_cols = tuple(lat.get(k) for k in ("avg", "min", "max", "p50", "p95", "p99"))
+    now = datetime.now(timezone.utc)
+    return [
+        OperatorRow(
+            run_id, stage, op, None, now, n_in, n_out, rate, total, *lat_cols, tput, 0, "{}"
+        )
+        for run_id, stage, op, n_in, n_out, rate, total, tput in collector.timed_rows()
+    ]
 
-    def _lat(key: str):
-        v = lat.get(key)
-        return F.lit(v).cast("double").alias(f"{key}_latency")
 
-    base = collector.to_dataframe()
-    return base.select(
-        "run_id",
-        "stage_name",
-        "operator_name",
-        F.lit(None).cast("int").alias("worker_id"),
-        F.current_timestamp().alias("timestamp"),
-        "input_records",
-        "output_records",
-        "pass_rate",
-        "total_time",
-        _lat("avg"),
-        _lat("min"),
-        _lat("max"),
-        _lat("p50"),
-        _lat("p95"),
-        _lat("p99"),
-        "throughput",
-        F.lit(0).cast("long").alias("error_count"),
-        F.lit("{}").alias("custom_metrics"),
-    )
+def _pass_rate(n_in: int | None, n_out: int | None) -> float | None:
+    # when(input > 0, output / input).otherwise(1.0)
+    if n_in is None or n_in <= 0:
+        return 1.0
+    return None if n_out is None else n_out / n_in
+
+
+def _mean(values: list[float]) -> float:
+    # left-to-right running sum, the order Spark's avg() adds in
+    return reduce(operator.add, values, 0.0) / len(values)
+
+
+def _groups(rows: Iterable, key) -> list[list]:
+    """Rows grouped by ``key``, groups and their members in row order."""
+    out: dict = {}
+    for r in rows:
+        out.setdefault(key(r), []).append(r)
+    return list(out.values())
+
+
+def stage_rows(op_rows: Iterable) -> list[StageRow]:
+    """Stage rollup of operator rows (aggregator semantics
+    ``executor.py:760-846``): per (run, stage) in row order, input = the
+    first operator's input, output = the last one's output, total time =
+    the max (the bottleneck), throughput min/max/mean, errors summed."""
+    out = []
+    for ops in _groups(op_rows, lambda r: (r.run_id, r.stage_name)):
+        tput = [o.throughput for o in ops]
+        n_in, n_out = ops[0].input_records, ops[-1].output_records
+        out.append(
+            StageRow(
+                ops[0].run_id, ops[0].stage_name, len(ops),
+                max(o.total_time for o in ops), min(tput), max(tput), _mean(tput),
+                sum(o.error_count for o in ops), n_in, n_out, _pass_rate(n_in, n_out),
+            )
+        )
+    return out
+
+
+def run_rows(st_rows: Iterable, config_json: str = "{}") -> list[RunRow]:
+    """Run rollup of stage rows: per run in row order, input = the first
+    stage's input, output = the last one's output, duration = the max
+    stage time, throughput = the mean of the stage means."""
+    out = []
+    for st in _groups(st_rows, lambda r: r.run_id):
+        n_in, n_out = st[0].input_records, st[-1].output_records
+        out.append(
+            RunRow(
+                st[0].run_id, len(st), n_in, n_out, max(s.total_time for s in st),
+                _mean([s.avg_throughput for s in st]), sum(s.error_count for s in st),
+                _pass_rate(n_in, n_out), config_json,
+            )
+        )
+    return out
+
+
+def operator_metrics_df(
+    collector: MetricsCollector, latencies: dict[str, float] | None | bool = True
+) -> DataFrame:
+    """The operators table (:func:`operator_rows`) as a DataFrame."""
+    return local_frame(collector.spark, operator_rows(collector, latencies), OPERATOR_SCHEMA)
 
 
 def stage_metrics_df(operators: DataFrame) -> DataFrame:
-    """stages_*.parquet rollup (metrics/writer.py:56-71; aggregator
-    semantics ``executor.py:760-846``: stage input = first op input,
-    output = last op output, bottleneck = max time)."""
-    w_in = (
-        operators.groupBy("run_id", "stage_name")
-        .agg(
-            F.count(F.lit(1)).alias("num_operators"),
-            F.min(F.struct("timestamp", "input_records")).alias("_first"),
-            F.max(F.struct("timestamp", "output_records")).alias("_last"),
-            F.max("total_time").alias("total_time"),
-            F.min("throughput").alias("min_throughput"),
-            F.max("throughput").alias("max_throughput"),
-            F.avg("throughput").alias("avg_throughput"),
-            F.sum("error_count").alias("error_count"),
-            F.first("input_records").alias("input_records"),
-            F.last("output_records").alias("output_records"),
-        )
-        .drop("_first", "_last")
-    )
-    return w_in.withColumn(
-        "pass_rate",
-        F.when(F.col("input_records") > 0, F.col("output_records") / F.col("input_records")).otherwise(1.0),
-    )
+    """The stages table (:func:`stage_rows`) over an operators table."""
+    return local_frame(operators.sparkSession, stage_rows(operators.collect()), STAGE_SCHEMA)
 
 
 def run_metrics_df(operators: DataFrame, stages: DataFrame, config_json: str = "{}") -> DataFrame:
-    """runs_*.parquet rollup (metrics/writer.py:73-82)."""
-    return (
-        stages.groupBy("run_id")
-        .agg(
-            F.count(F.lit(1)).alias("num_stages"),
-            F.first("input_records").alias("total_input_records"),
-            F.last("output_records").alias("total_output_records"),
-            F.max("total_time").alias("duration"),
-            F.avg("avg_throughput").alias("avg_throughput"),
-            F.sum("error_count").alias("total_errors"),
-        )
-        .withColumn(
-            "overall_pass_rate",
-            F.when(
-                F.col("total_input_records") > 0,
-                F.col("total_output_records") / F.col("total_input_records"),
-            ).otherwise(1.0),
-        )
-        .withColumn("config", F.lit(config_json))
-    )
+    """The runs table (:func:`run_rows`) over a stages table."""
+    return local_frame(stages.sparkSession, run_rows(stages.collect(), config_json), RUN_SCHEMA)
+
+
+def _append_part(fs, directory: str, table) -> None:
+    """Add ``table`` to a parquet directory as one new part file. It is
+    written under a ``_`` name, which Spark readers skip, and renamed into
+    place: a crash never leaves a half-written part visible."""
+    import pyarrow.parquet as pq
+
+    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    fs.create_dir(directory, recursive=True)
+    pq.write_table(table, f"{directory}/_{name}", filesystem=fs, compression="snappy")
+    fs.move(f"{directory}/_{name}", f"{directory}/{name}")
 
 
 def write_metrics(collector: MetricsCollector, out_dir: str, config_json: str = "{}") -> None:
-    """Write the three parquet tables (suffix layout mirrors
-    ``metrics/writer.py``: operators_/stages_/runs_)."""
-    ops = operator_metrics_df(collector)
-    ops.write.mode("append").parquet(f"{out_dir}/operators")
-    st = stage_metrics_df(ops)
-    st.write.mode("append").parquet(f"{out_dir}/stages")
-    run_metrics_df(ops, st, config_json).write.mode("append").parquet(f"{out_dir}/runs")
+    """Append the three parquet tables under ``out_dir`` (suffix layout
+    mirrors ``metrics/writer.py``: operators_/stages_/runs_). The rows are
+    built on the driver and written by pyarrow, so no Spark job runs;
+    ``out_dir`` is a local path or a URI pyarrow can open."""
+    from pyarrow import fs as pafs
+
+    ops = operator_rows(collector)
+    stages = stage_rows(ops)
+    fs, root = pafs.FileSystem.from_uri(out_dir if "://" in out_dir else os.path.abspath(out_dir))
+    for name, rows, schema in (
+        ("operators", ops, OPERATOR_SCHEMA),
+        ("stages", stages, STAGE_SCHEMA),
+        ("runs", run_rows(stages, config_json), RUN_SCHEMA),
+    ):
+        _append_part(fs, f"{root.rstrip('/')}/{name}", arrow_table(rows, schema))
 
 
 # ---------------------------------------------------------------------------

@@ -112,8 +112,6 @@ LSH_BANDS = 4  # 12 hashes → 4 bands × 3 rows
 MINHASH_P = 2_147_483_647  # Mersenne prime 2^31-1
 MINHASH_A = tuple(2 * i + 3 for i in range(NUM_MINHASHES))
 MINHASH_B = tuple(7 * i + 1 for i in range(NUM_MINHASHES))
-# retained for backward compat of older call sites/tests
-MINHASH_SALTS: tuple[str, ...] = tuple(f"mh{i}|" for i in range(NUM_MINHASHES))
 
 
 def shingle_hashes(shingles: Column) -> Column:
@@ -238,8 +236,9 @@ def minhash_lsh_dup_map(
     # The pair SET is bit-identical (oracle-pinned); the only cost is S×
     # the banded table's (id, band) rows through the exchange — metadata,
     # not payload (§8 lightweight-proxy rule; the shingle hashes join
-    # later, after candidate dedup). NULL ids produce a NULL salt and no
-    # pairs, same as the previous id-comparison join. ``S`` is
+    # later, after candidate dedup). xxhash64 is null-tolerant, so a NULL
+    # id still gets a salt; it forms no pairs because the null-rejecting
+    # ``l.id > r.id`` predicate excludes it, as in the unsalted join. ``S`` is
     # env-parameterised with a scale-neutral default; 1 restores the
     # unsalted join for A/B.
     salt_n = int(os.environ.get("SPARK_GRAFT_LSH_BAND_SALT", "8"))
@@ -2032,8 +2031,12 @@ def connected_components_star(
     # "remove actions"): the first consumer below (the contraction's
     # combined materialize+count job, or the first star round) computes
     # and stores the edge blocks as a side effect, so edge derivation no
-    # longer costs its own sequential driver round trip. `nodes` and every
-    # later reader hit the stored blocks.
+    # longer costs its own sequential driver round trip. With the default
+    # spark.checkpoint.checkpointAllMarkedAncestors=false that job
+    # finalizes only the nearest marked RDD (the contracted `cur`), so
+    # `e`'s lineage is not truncated: `nodes` and the later readers reuse
+    # the blocks localCheckpoint persisted at MEMORY_AND_DISK, and on a
+    # lost executor or block they re-derive the edge set.
     e = e.localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("src").alias("id")).union(e.select(F.col("dst").alias("id")))

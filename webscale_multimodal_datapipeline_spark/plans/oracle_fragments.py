@@ -16,7 +16,6 @@ from webscale_multimodal_datapipeline_spark.functions.text import LANG_MARKERS, 
 from webscale_multimodal_datapipeline_spark.operators.dedup import (
     EMB_LSH_PLANES,
     LSH_BANDS,
-    MINHASH_SALTS,
     SIMHASH_BITS,
     _plane_coef,
 )

@@ -12,8 +12,6 @@ whole-stage codegen with the filters pushed at the scan; the reference's
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1028,11 +1026,8 @@ def t_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-pass steal 0.0 quoted in OPTIMIZATION_r11.md). At 100 TB the
     # same logic holds — an aggregate-before-shuffle (guide §2.3) beats a
     # full-stream exchange whenever keys repeat. Identical result either
-    # way (oracle-pinned); SPARK_GRAFT_BIGRAM_SHARED_EXCHANGE=1 restores
-    # the r10 spelling for A/B.
+    # way (oracle-pinned).
     bigrams = _adjacent_pairs(d)
-    if os.environ.get("SPARK_GRAFT_BIGRAM_SHARED_EXCHANGE", "0") not in ("", "0", "false", "no"):
-        bigrams = bigrams.repartition("term_a", "term_b")
     c_ab = bigrams.groupBy("term_a", "term_b").agg(F.count(F.lit(1)).alias("c_ab"))
     c_a = c_ab.groupBy("term_a").agg(F.sum("c_ab").alias("c_a"))
     lm = c_ab.join(c_a, "term_a").select(

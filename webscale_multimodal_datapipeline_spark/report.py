@@ -3,9 +3,9 @@
 The reference emits a plotly HTML report (funnel, Sankey, timeline,
 bottleneck, latency heatmap — ``framework/metrics/reporter.py:126-1314``).
 Here the same report sections are rendered as dependency-free static HTML:
-the *analytics* are the Spark SQL aggregates in ``metrics.py`` (funnel /
-bottleneck / stage rollups); only their tiny driver-side results are
-formatted. Pass-rate "charts" are inline-CSS bars, so the file opens
+the *analytics* are the funnel / bottleneck Spark SQL aggregates and the
+stage / run rollups in ``metrics.py``; only their tiny driver-side results
+are formatted. Pass-rate "charts" are inline-CSS bars, so the file opens
 anywhere with no JS.
 
 Collecting here is correct, not a hot-path anti-pattern: the inputs are

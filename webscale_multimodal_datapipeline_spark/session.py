@@ -10,6 +10,8 @@ one you'd also want on a real cluster at 100 TB:
   is per-job sized (AQE coalesces down from a high initial value).
 - Arrow enabled — the pandas-UDF boundary is the moral equivalent of the
   reference's Rust batch kernels (batch in / batch out, GIL-free).
+- Driver memory from ``SPARK_GRAFT_DRIVER_MEM``, else half of physical RAM
+  capped at 16g (:func:`driver_memory`).
 - UTC session timezone — deterministic timestamp semantics for the DuckDB
   oracle comparison.
 - Python workers get the package root on ``PYTHONPATH`` so pandas UDFs
@@ -24,14 +26,30 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterable, Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 # directory holding the package; Spark appends the driver's own
 # PYTHONPATH to the workers' after this entry
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def driver_memory(physical_bytes: int | None = None) -> str:
+    """Default driver heap: half of physical RAM, capped at 16g (local
+    mode runs every task in the driver JVM, and the rest of the host is
+    left to Python workers and the page cache)."""
+    if physical_bytes is None:
+        try:
+            physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):
+            return "16g"
+    return f"{min(physical_bytes // 2 >> 20, 16 << 10)}m"
 
 
 def get_spark(
@@ -51,7 +69,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Runtime bloom-filter join pruning: when a selective build side
@@ -70,16 +88,10 @@ def get_spark(
     return spark
 
 
-def local_frame(
-    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
-) -> DataFrame:
-    """DataFrame over a few driver-side rows (tuples in ``schema`` order),
-    built as an Arrow table so Spark plans it as a ``LocalRelation``.
-
-    ``spark.createDataFrame(list)`` instead parallelizes a Python RDD, and
-    every action that reads it pickles the rows through Python workers
-    again — a job per read for a table of a handful of rows. ``schema`` is
-    a ``StructType`` or a DDL string."""
+def arrow_table(rows: Iterable[Sequence], schema: StructType | str) -> pa.Table:
+    """A few driver-side rows (tuples in ``schema`` order) as a
+    ``pyarrow.Table`` typed by Spark's Arrow mapping of ``schema`` (a
+    ``StructType`` or a DDL string)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -87,8 +99,21 @@ def local_frame(
         schema = DataType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """DataFrame over a few driver-side rows (tuples in ``schema`` order),
+    built as an Arrow table (:func:`arrow_table`) so Spark plans it as a
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(list)`` instead parallelizes a Python RDD, and
+    every action that reads it pickles the rows through Python workers
+    again — a job per read for a table of a handful of rows. ``schema`` is
+    a ``StructType`` or a DDL string."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
